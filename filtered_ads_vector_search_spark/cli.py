@@ -21,7 +21,7 @@ Usage (mirrors the reference flags)::
     python -m filtered_ads_vector_search_spark \
         --data /root/testdata/sf0.01 \
         --quantization-folder full_precision \
-        --config-path /root/reference \
+        --config-path tests/reference_configs \
         --algo-type cagra \
         --results-dir /tmp/grid_results
 """

@@ -12,7 +12,12 @@ import os
 
 from pyspark.sql import SparkSession
 
+from . import _pydaemon
+
 __all__ = ["get_spark", "stop_spark"]
+
+# the directory holding this package, for the local workers' PYTHONPATH
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def get_spark(
@@ -75,6 +80,14 @@ def get_spark(
         builder = builder.config(
             "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g")
         )
+        # LOCAL-ONLY Python worker daemon: PySpark's own, with zipimport's
+        # per-task archive re-read stat-guarded (~0.25 s per task on
+        # CPython < 3.13; see _pydaemon). The package root goes on the
+        # workers' PYTHONPATH so the daemon imports whatever the driver's
+        # cwd. Gated on local masters: a cluster's executors may not have
+        # the package installed.
+        builder = builder.config("spark.python.daemon.module", _pydaemon.__name__)
+        builder = builder.config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     elif os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES"):
         builder = builder.config(
             "spark.sql.files.maxPartitionBytes",

@@ -14,6 +14,9 @@ from filtered_ads_vector_search_spark.operators import topk as TK
 
 from conftest import SF_SMOKE
 
+# reference-shaped filter_config.yaml + params_config.yaml
+CONFIG_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "reference_configs")
+
 
 def test_param_grid_constraint():
     cfg = GridConfig(n_centroids=[4, 8], nprobe=[2, 8, 16])
@@ -109,7 +112,7 @@ def test_summarize_works_for_both_grid_families(spark):
 
 
 def test_yaml_config_roundtrip_reference_files(spark):
-    """Load the reference's own filter_config.yaml/params_config.yaml
+    """Load reference-shaped filter_config.yaml/params_config.yaml
     (utils_grid_search.py:90-139 semantics) and drive a grid run at the
     smoke SF from them."""
     from filtered_ads_vector_search_spark.operators.filters import with_rating_bucket
@@ -121,7 +124,7 @@ def test_yaml_config_roundtrip_reference_files(spark):
         lsh_grid_from_config,
     )
 
-    cfg = load_all_input_configs("/root/reference")
+    cfg = load_all_input_configs(CONFIG_DIR)
     # merge semantics: active_filters selection, settings flattened, defaults
     assert [name for _, name in cfg["filter_configurations"]] == ["mid_rated"]
     assert cfg["filter_configurations"][0][0] == ["1.0-2.0", "2.0-3.0"]
@@ -178,7 +181,7 @@ def test_cli_end_to_end_reference_configs(spark, tmp_path):
             [
                 "--data", SF_SMOKE,
                 "--quantization-folder", "full_precision",
-                "--config-path", "/root/reference",
+                "--config-path", CONFIG_DIR,
                 "--algo-type", algo,
                 "--results-dir", str(tmp_path / algo),
                 "--limit-values", "1",
@@ -209,7 +212,7 @@ def test_cli_half_precision_tier(spark, tmp_path):
         [
             "--data", SF_SMOKE,
             "--quantization-folder", "half_precision",
-            "--config-path", "/root/reference",
+            "--config-path", CONFIG_DIR,
             "--algo-type", "cagra",
             "--results-dir", str(tmp_path),
             "--limit-values", "1",
@@ -252,8 +255,8 @@ def test_grid_search_ivfpq_end_to_end(spark, tmp_path):
 
 
 def test_cli_ivfpq_algo_type(spark, tmp_path):
-    """--algo-type ivfpq drives the composed-tier sweep from the reference's
-    own YAML (itopk_size -> rerank axis) and writes the same artifacts."""
+    """--algo-type ivfpq drives the composed-tier sweep from the
+    reference-shaped YAML (itopk_size -> rerank axis) and writes the same artifacts."""
     import csv
 
     from filtered_ads_vector_search_spark.cli import run
@@ -262,7 +265,7 @@ def test_cli_ivfpq_algo_type(spark, tmp_path):
         [
             "--data", SF_SMOKE,
             "--quantization-folder", "full_precision",
-            "--config-path", "/root/reference",
+            "--config-path", CONFIG_DIR,
             "--algo-type", "ivfpq",
             "--results-dir", str(tmp_path),
             "--limit-values", "1",

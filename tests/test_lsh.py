@@ -102,11 +102,22 @@ def test_lsh_arrow_bitwise_equals_expr(spark):
     element-ascending folds, the (dist, neighbor_id) tie-break, and the
     bucket-sign arithmetic driver-side)."""
     q, c = _setup(spark)
-    idx = LSHIndex.build(c, n_bits=4, n_tables=8, metric="cosine", seed=42)
+    # one all-zero vector on each side exercises cosine's zero-norm branch
+    # (NULL distances) in both kernels
+    dim = len(c.first()["embedding"])
+    zero = F.array_repeat(F.lit(0.0).cast("float"), dim)
+    qz = q.unionByName(
+        q.limit(1).select(F.lit(-1).cast("long").alias("query_id"), zero.alias("q_vec"))
+    )
+    cz = c.unionByName(
+        c.limit(1).select(F.lit(-2).cast("long").alias("vec_id"), zero.alias("embedding"), "label")
+    )
+    idx = LSHIndex.build(cz, n_bits=4, n_tables=8, metric="cosine", seed=42)
     for mp in (0, 2):
-        a = sorted(map(tuple, idx.search(q, k=10, multiprobe=mp, kernel="arrow").collect()))
-        e = sorted(map(tuple, idx.search(q, k=10, multiprobe=mp, kernel="expr").collect()))
+        a = sorted(map(tuple, idx.search(qz, k=10, multiprobe=mp, kernel="arrow").collect()))
+        e = sorted(map(tuple, idx.search(qz, k=10, multiprobe=mp, kernel="expr").collect()))
         assert a == e, f"multiprobe={mp}: arrow != expr"
+        assert any(r[0] == -1 for r in e), "zero-norm query must be answered"
     idx.unpersist()
     for metric in ("sqeuclidean", "inner_product"):
         m = LSHIndex.build(c, n_bits=4, n_tables=2, metric=metric, seed=7)
